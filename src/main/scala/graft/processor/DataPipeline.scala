@@ -194,6 +194,11 @@ final case class ResolvedStep(
 /** Per-step timing record — the reference's `ProcessorPerf`/
   * `PipelineStepPerf` (`_DataPipeline.py:61-144`); here only fit does eager
   * work (transform is one lazy plan), so fit wall-time is what's recorded.
+  * A step's `fitSec` is the time of its own fits (the processors that are
+  * not [[AggregateFit]]) plus its share of its stage's one shared
+  * aggregate: that aggregate's time is split equally across the stage's
+  * aggregate-fit bindings, each step taking the shares of its own. The
+  * `fitSec` of all steps therefore sums to the measured fit time.
   */
 final case class StepPerf(transformer: String, inputCols: Seq[String], fitSec: Double)
 
@@ -237,44 +242,75 @@ final class DataPipeline(
     pattern.replace("{col_name}", inputCol)
 
   /** Fit: resolve each step against the evolving schema and fit its
-    * processors (each fit = one distributed aggregate at most), exactly the
-    * reference's `from_config` + `fit_transform` split.
+    * processors, the reference's `from_config` + `fit_transform` split,
+    * in stages. Consecutive steps share a stage until a step that reads
+    * data in its fit (not [[Stateless]]) has an input column that an
+    * earlier step of the current stage writes. Every processor of a stage
+    * fits against the frame at the start of the stage, which holds the same
+    * values in the columns it reads as the frame its step would see: all
+    * [[AggregateFit]] bindings of the stage from one `df.agg(...)`, any
+    * other fitting processor (TF-IDF, dense-rank encoding) by its own fit.
+    * So a stage costs one Spark query plus those own fits, and the fitted
+    * state equals fitting each processor on its own, in step order.
     */
   def fit(df0: DataFrame, schema0: MLSchema): this.type = {
-    var df = df0
+    var df = df0 // the frame at the start of the current stage
+    var columns = df0.columns.toSeq
     var schema = schema0
+    val stage = Seq.newBuilder[ResolvedStep]
+    var written = Set.empty[String]
     val out = Seq.newBuilder[ResolvedStep]
     val perfOut = Seq.newBuilder[StepPerf]
+    val caseSensitive = df0.sparkSession.conf.get("spark.sql.caseSensitive").toBoolean
+    def sameName(a: String, b: String) = if (caseSensitive) a == b else a.equalsIgnoreCase(b)
+    def closeStage(): Unit = {
+      val steps = stage.result()
+      perfOut ++= fitStage(df, steps)
+      steps.foreach(s => df = applyStep(df, s))
+      out ++= steps
+      stage.clear()
+      written = Set.empty
+    }
     config.steps.foreach { step =>
-      val cols = matchColumns(step.input, df.columns.toSeq, schema)
-      resolveStep(step, cols) match {
-        case None => // SKIP behavior
-        case Some(rs) =>
-          val t0 = System.nanoTime()
-          val fitted = rs.bindings.map { case (ins, proc, o) =>
-            proc match {
-              case p: SingleColumnProcessor =>
-                p.fit(df, ins.head)
-                (ins, proc, o)
-              case p: Nto1ColumnProcessor =>
-                p.fit(df, ins)
-                (ins, proc, o)
-              case p: FrameLevelProcessor =>
-                p.fit(df, ins.head)
-                (ins, proc, o)
-            }
-          }
-          perfOut += StepPerf(rs.transformer, cols, (System.nanoTime() - t0) / 1e9)
-          val rstep = ResolvedStep(rs.transformer, fitted)
-          out += rstep
-          val (df2, schema2) = applyStep(df, schema, rstep)
-          df = df2
-          schema = schema2
+      resolveStep(step, matchColumns(step.input, columns, schema)).foreach { rs =>
+        val reads = rs.bindings.collect { case (ins, p, _) if !p.isInstanceOf[Stateless] => ins }
+        if (reads.flatten.exists(c => written.exists(sameName(_, c)))) closeStage()
+        stage += rs
+        val outs = rs.bindings.map(_._3)
+        written ++= outs
+        // the frame's columns after the step: withColumn replaces a column
+        // of the same name or appends one
+        columns = columns.filterNot(c => outs.exists(sameName(_, c))) ++ outs.distinct
+        schema = stepSchema(schema, rs)
       }
     }
+    closeStage()
     resolved = Some(out.result())
     perf = perfOut.result()
     this
+  }
+
+  /** Fit one stage's steps against `df`, the frame at the start of the
+    * stage; the timings follow [[StepPerf]]'s split.
+    */
+  private def fitStage(df: DataFrame, steps: Seq[ResolvedStep]): Seq[StepPerf] = {
+    val aggFits = steps.flatMap(_.bindings.collect { case (ins, p: AggregateFit, _) => (p, ins) })
+    val t0 = System.nanoTime()
+    AggregateFit.fitAll(df, aggFits)
+    val aggSec = (System.nanoTime() - t0) / 1e9
+    steps.map { s =>
+      val t1 = System.nanoTime()
+      s.bindings.foreach {
+        case (_, _: AggregateFit, _) =>
+        case (ins, p: SingleColumnProcessor, _) => p.fit(df, ins.head)
+        case (ins, p: Nto1ColumnProcessor, _) => p.fit(df, ins)
+        case (ins, p: FrameLevelProcessor, _) => p.fit(df, ins.head)
+      }
+      val ownSec = (System.nanoTime() - t1) / 1e9
+      val aggShare = s.bindings.count(_._2.isInstanceOf[AggregateFit])
+      StepPerf(s.transformer, s.bindings.flatMap(_._1).distinct,
+        ownSec + (if (aggShare == 0) 0.0 else aggSec * aggShare / aggFits.size))
+    }
   }
 
   private def resolveStep(step: StepConfig, cols: Seq[String]): Option[ResolvedStep] = {
@@ -301,19 +337,17 @@ final class DataPipeline(
     }
   }
 
-  private def applyStep(df: DataFrame, schema: MLSchema, step: ResolvedStep): (DataFrame, MLSchema) = {
-    var cur = df
-    var sch = schema.fields
-    step.bindings.foreach { case (ins, proc, o) =>
+  private def applyStep(df: DataFrame, step: ResolvedStep): DataFrame =
+    step.bindings.foldLeft(df) { case (cur, (ins, proc, o)) =>
       proc match {
-        case p: SingleColumnProcessor => cur = cur.withColumn(o, p.transform(col(ins.head)))
-        case p: Nto1ColumnProcessor => cur = cur.withColumn(o, p.transform(cur, ins))
-        case p: FrameLevelProcessor => cur = p.transformFrame(cur, ins.head, o)
+        case p: SingleColumnProcessor => cur.withColumn(o, p.transform(col(ins.head)))
+        case p: Nto1ColumnProcessor => cur.withColumn(o, p.transform(cur, ins))
+        case p: FrameLevelProcessor => p.transformFrame(cur, ins.head, o)
       }
-      sch = sch + (o -> proc.outputMLType)
     }
-    (cur, MLSchema(sch))
-  }
+
+  private def stepSchema(schema: MLSchema, step: ResolvedStep): MLSchema =
+    MLSchema(schema.fields ++ step.bindings.map { case (_, p, o) => o -> p.outputMLType })
 
   /** Transform: fold the resolved steps into one lazy plan; persist hooks per
     * `PersistLevel` (`_DataPipeline.py:762-925`).
@@ -326,9 +360,9 @@ final class DataPipeline(
     }
     var schema = schema0
     steps.foreach { s =>
-      val (d2, s2) = applyStep(df, schema, s)
+      val d2 = applyStep(df, s)
       df = if (persist == PersistLevel.EveryStep) materialize(d2) else d2
-      schema = s2
+      schema = stepSchema(schema, s)
     }
     df = persist match {
       case PersistLevel.AfterPipeline | PersistLevel.BeforeAfterPipeline => materialize(df)

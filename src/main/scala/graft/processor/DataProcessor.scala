@@ -32,7 +32,8 @@ object MissingColumnBehavior {
   * whole-stage-codegen'd projection (SURVEY.md §3.2 "the whole pipeline
   * typically becomes a single projection"), which is what makes the same
   * pipeline viable on 100 TB: no serialization boundary, full pushdown, and
-  * the fit statistics are one distributed aggregate each.
+  * the fit statistics of one pipeline stage share one distributed
+  * aggregate ([[AggregateFit]]).
   */
 trait DataProcessor extends Serializable {
   def name: String
@@ -73,6 +74,39 @@ trait SingleColumnProcessor extends DataProcessor {
 trait Nto1ColumnProcessor extends DataProcessor {
   def fit(df: DataFrame, inputCols: Seq[String]): this.type = this
   def transform(df: DataFrame, inputCols: Seq[String]): Column
+}
+
+/** Marker of a processor whose fit reads no data. [[DataPipeline.fit]]
+  * never starts a new stage for such a step, since its (no-op) fit does not
+  * care which frame it sees.
+  */
+trait Stateless extends DataProcessor
+
+/** A processor whose whole fit is one global aggregate over its input
+  * columns. `fitAggregate` returns that aggregate together with the setter
+  * that takes the aggregate's value and sets the fitted state, so a caller
+  * can fit many such processors from ONE `df.agg(...)`
+  * ([[AggregateFit.fitAll]], which is also what every standalone `fit` of
+  * these processors runs). `None` means the fitted state needs no data
+  * (e.g. a constant fill) and has been set by the call itself.
+  */
+trait AggregateFit extends DataProcessor {
+  def fitAggregate(df: DataFrame, inputCols: Seq[String]): Option[(Column, Any => Unit)]
+}
+
+object AggregateFit {
+
+  /** Fit every `(processor, inputCols)` pair from one `df.agg` over `df`:
+    * one Spark query however many pairs need data, none if no pair does.
+    */
+  def fitAll(df: DataFrame, fits: Seq[(AggregateFit, Seq[String])]): Unit = {
+    val planned = fits.flatMap { case (p, ins) => p.fitAggregate(df, ins) }
+    if (planned.nonEmpty) {
+      val aggs = planned.zipWithIndex.map { case ((agg, _), i) => agg.as(s"_agg$i") }
+      val row = df.agg(aggs.head, aggs.tail: _*).head()
+      planned.zipWithIndex.foreach { case ((_, set), i) => set(row.get(i)) }
+    }
+  }
 }
 
 /** 1:1 processor whose transform is a FRAME rewrite, not a per-row Column

@@ -1,6 +1,6 @@
 package graft.processor
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.core.MLType
 
@@ -64,7 +64,8 @@ object Processors {
   // ---- text (§2.10) -----------------------------------------------------
 
   /** upper/lower (`_text/_CaseTransformation.py:16-34`); null in → null out. */
-  final class CaseTransformation(params: Map[String, Any]) extends SingleColumnProcessor {
+  final class CaseTransformation(params: Map[String, Any])
+      extends SingleColumnProcessor with Stateless {
     val name = "CaseTransformation"
     val inputMLTypes = Seq(MLType.Text)
     val outputMLType = MLType.Text
@@ -74,7 +75,8 @@ object Processors {
   }
 
   /** strip `<.*?>` (`_text/_HtmlTagRemoval.py:12-23`). */
-  final class HtmlTagRemoval(params: Map[String, Any]) extends SingleColumnProcessor {
+  final class HtmlTagRemoval(params: Map[String, Any])
+      extends SingleColumnProcessor with Stateless {
     val name = "HtmlTagRemoval"
     val inputMLTypes = Seq(MLType.Text)
     val outputMLType = MLType.Text
@@ -84,7 +86,8 @@ object Processors {
   /** punctuation → replacement char (`_text/_PunctuationCleaner.py:12-25`):
     * `translate` over Python's `string.punctuation` set.
     */
-  final class PunctuationCleaner(params: Map[String, Any]) extends SingleColumnProcessor {
+  final class PunctuationCleaner(params: Map[String, Any])
+      extends SingleColumnProcessor with Stateless {
     val name = "PunctuationCleaner"
     val inputMLTypes = Seq(MLType.Text)
     val outputMLType = MLType.Text
@@ -102,7 +105,8 @@ object Processors {
     * (`_text/_RegexSubstitution.py:16-61`): chained regexp_replace with
     * embedded `(?i)(?m)` flags — still one codegen'd projection.
     */
-  final class RegexSubstitution(params: Map[String, Any]) extends SingleColumnProcessor {
+  final class RegexSubstitution(params: Map[String, Any])
+      extends SingleColumnProcessor with Stateless {
     val name = "RegexSubstitution"
     val inputMLTypes = Seq(MLType.Text)
     val outputMLType = MLType.Text
@@ -119,7 +123,7 @@ object Processors {
   /** literal substring removal (`_text/_StringRemoval.py:9-31`) — `replace`,
     * no regex semantics.
     */
-  final class StringRemoval(params: Map[String, Any]) extends SingleColumnProcessor {
+  final class StringRemoval(params: Map[String, Any]) extends SingleColumnProcessor with Stateless {
     val name = "StringRemoval"
     val inputMLTypes = Seq(MLType.Text)
     val outputMLType = MLType.Text
@@ -134,7 +138,8 @@ object Processors {
     * aggregate, or user order); nulls become empty strings with separators
     * kept — the reference's DataFrame-path semantics (`fillna('')`).
     */
-  final class TextConcatenation(params: Map[String, Any]) extends Nto1ColumnProcessor {
+  final class TextConcatenation(params: Map[String, Any])
+      extends Nto1ColumnProcessor with AggregateFit {
     val name = "TextConcatenation"
     val inputMLTypes = Seq(MLType.Text)
     val outputMLType = MLType.Text
@@ -148,19 +153,29 @@ object Processors {
     }
 
     override def fit(df: DataFrame, inputCols: Seq[String]): this.type = {
-      orderedCols = Some(order match {
-        case "sort_by_name_ascending" => inputCols.sorted
-        case "sort_by_name_descending" => inputCols.sorted.reverse
-        case "sort_by_shortest_first" =>
-          // one aggregate over all columns: avg string length of non-nulls
-          val lens = df.select(inputCols.map(c => avg(length(col(c).cast("string"))).as(c)): _*).head()
-          inputCols.sortBy(c => (Option(lens.getAs[Any](c)).fold(0.0)(_.toString.toDouble), c))
-        case "input_order" =>
-          orderedCols.getOrElse(throw new IllegalArgumentException(
-            "input_ordering required for column_order=input_order"))
-        case other => throw new IllegalArgumentException(s"column_order: $other")
-      })
+      AggregateFit.fitAll(df, Seq(this -> inputCols))
       this
+    }
+
+    def fitAggregate(df: DataFrame, inputCols: Seq[String]): Option[(Column, Any => Unit)] = {
+      def set(cols: Seq[String]): Unit = orderedCols = Some(cols)
+      order match {
+        case "sort_by_name_ascending" => set(inputCols.sorted); None
+        case "sort_by_name_descending" => set(inputCols.sorted.reverse); None
+        case "sort_by_shortest_first" =>
+          // avg string length of non-nulls, one entry per input column
+          Some((array(inputCols.map(c => avg(length(col(c).cast("string")))): _*), { v =>
+            val lens = v.asInstanceOf[collection.Seq[Any]]
+            set(inputCols.zip(lens).sortBy { case (c, l) =>
+              (Option(l).fold(0.0)(_.asInstanceOf[Double]), c)
+            }.map(_._1))
+          }))
+        case "input_order" =>
+          set(orderedCols.getOrElse(throw new IllegalArgumentException(
+            "input_ordering required for column_order=input_order")))
+          None
+        case other => throw new IllegalArgumentException(s"column_order: $other")
+      }
     }
 
     def transform(df: DataFrame, inputCols: Seq[String]): Column = {
@@ -190,11 +205,12 @@ object Processors {
   /** Label → dense int codes (`_categorical/_LabelEncoding.py:45-218`).
     * Fit: sorted distinct labels (numeric sort for numeric inputs, like
     * np.unique) → index per `encoding_range`; one distributed
-    * distinct+collect, vocabulary broadcast as a literal map.
+    * `collect_set` aggregate, vocabulary broadcast as a literal map.
     * Transform: `element_at(map, label)` + unknown-label fill
     * (`ENCODING_RANGE_TO_UNKNOWN_LABELS_MAP`). Inverse transform included.
     */
-  final class LabelEncoding(params: Map[String, Any]) extends SingleColumnProcessor {
+  final class LabelEncoding(params: Map[String, Any])
+      extends SingleColumnProcessor with AggregateFit {
     val name = "LabelEncoding"
     val inputMLTypes = Seq(MLType.Text, MLType.Categorical, MLType.Int)
     val outputMLType = MLType.Int
@@ -207,23 +223,38 @@ object Processors {
     private var encoding: Option[Seq[(String, Long)]] = None
 
     override def fit(df: DataFrame, inputCol: String): this.type = {
-      // Driver-memory contract (the Spark-ML StringIndexer contract): the
-      // fitted label space collects to the driver. Label encoding is for
-      // categorical columns — a high-cardinality (≈ row-count) key column
-      // fit would gather the whole key space; encode such columns with a
-      // hash/dense-rank instead.
+      AggregateFit.fitAll(df, Seq(this -> Seq(inputCol)))
+      this
+    }
+
+    /** The sorted distinct labels as one `collect_set`: nulls and NaN are
+      * no labels (and -0.0 is 0.0, as grouping has it); the set sorts by
+      * the numeric value for numeric inputs (like np.unique), by the string
+      * form otherwise, ties broken by the value itself; each label is the
+      * collected value's `toString`.
+      *
+      * Driver-memory contract (the Spark-ML StringIndexer contract): the
+      * fitted label space collects to the driver. Label encoding is for
+      * categorical columns — a high-cardinality (≈ row-count) key column
+      * fit would gather the whole key space; encode such columns with a
+      * hash/dense-rank instead.
+      */
+    def fitAggregate(df: DataFrame, inputCols: Seq[String]): Option[(Column, Any => Unit)] = {
+      import org.apache.spark.sql.types.{DoubleType, FloatType, NumericType}
+      val inputCol = inputCols.head
       val c = col(inputCol)
       val filled = missingFill.fold(c)(f => coalesce(c, lit(f)))
-      val numeric = df.schema(inputCol).dataType match {
-        case _: org.apache.spark.sql.types.NumericType => true
-        case _ => false
+      val label = df.select(filled).schema.head.dataType match {
+        case dt @ (FloatType | DoubleType) =>
+          when(isnan(filled), lit(null)).when(filled === 0, lit(0).cast(dt)).otherwise(filled)
+        case _ => filled
       }
-      val distinct = df.select(filled.as("v")).na.drop()
-        .distinct()
-        .orderBy(if (numeric) col("v").cast("double") else col("v").cast("string"))
-        .collect().map(_.get(0).toString).toSeq
-      fitLabels(distinct)
-      this
+      val key = df.schema(inputCol).dataType match {
+        case _: NumericType => label.cast("double")
+        case _ => label.cast("string")
+      }
+      Some((array_sort(collect_set(when(label.isNotNull, struct(key, label)))),
+        v => fitLabels(v.asInstanceOf[collection.Seq[Row]].map(_.get(1).toString).toSeq)))
     }
 
     private[processor] def fitLabels(sortedLabels: Seq[String]): Unit = {
@@ -304,7 +335,7 @@ object Processors {
   /** prefix/suffix affix (`_categorical/_LabelAffix.py:16-36`); null-safe
     * via concat's null propagation.
     */
-  final class LabelAffix(params: Map[String, Any]) extends SingleColumnProcessor {
+  final class LabelAffix(params: Map[String, Any]) extends SingleColumnProcessor with Stateless {
     val name = "LabelAffix"
     val inputMLTypes = Seq(MLType.Text, MLType.Categorical)
     val outputMLType = MLType.Categorical
@@ -318,7 +349,8 @@ object Processors {
     * .py:21-77`): fit = one `mode(col)` aggregate (deterministic=min on ties,
     * matching pandas `mode().iloc[0]`).
     */
-  final class CategoricalMissingValueImputation(params: Map[String, Any]) extends SingleColumnProcessor {
+  final class CategoricalMissingValueImputation(params: Map[String, Any])
+      extends SingleColumnProcessor with AggregateFit {
     val name = "CategoricalMissingValueImputation"
     val inputMLTypes = Seq(MLType.Categorical)
     val outputMLType = MLType.Categorical
@@ -333,13 +365,16 @@ object Processors {
     }
 
     override def fit(df: DataFrame, inputCol: String): this.type = {
-      // backtick-escape (the SCol.mode_ discipline): a space/dot in the
-      // column name would otherwise break the SQL or resolve a nested field
-      if (strategy == "mode")
-        imputed = Option(df.select(
-          expr(s"mode(${P.quoted(inputCol)}, true)")).head().get(0)).map(_.toString)
+      AggregateFit.fitAll(df, Seq(this -> Seq(inputCol)))
       this
     }
+
+    def fitAggregate(df: DataFrame, inputCols: Seq[String]): Option[(Column, Any => Unit)] =
+      // backtick-escape (the SCol.mode_ discipline): a space/dot in the
+      // column name would otherwise break the SQL or resolve a nested field
+      if (strategy != "mode") None
+      else Some((expr(s"mode(${P.quoted(inputCols.head)}, true)"),
+        v => imputed = Option(v).map(_.toString)))
     def transform(in: Column): Column = {
       val v = imputed.getOrElse(notFitted("transform"))
       coalesce(in, lit(v))
@@ -354,7 +389,8 @@ object Processors {
     * (`_numeric/_NumericMissingValueImputation.py:27-87`); each strategy is
     * one distributed aggregate at fit.
     */
-  final class NumericMissingValueImputation(params: Map[String, Any]) extends SingleColumnProcessor {
+  final class NumericMissingValueImputation(params: Map[String, Any])
+      extends SingleColumnProcessor with AggregateFit {
     val name = "NumericMissingValueImputation"
     val inputMLTypes = Seq(MLType.Int, MLType.Float)
     val outputMLType = MLType.Float
@@ -369,19 +405,24 @@ object Processors {
     }
 
     override def fit(df: DataFrame, inputCol: String): this.type = {
+      AggregateFit.fitAll(df, Seq(this -> Seq(inputCol)))
+      this
+    }
+
+    def fitAggregate(df: DataFrame, inputCols: Seq[String]): Option[(Column, Any => Unit)] = {
+      val inputCol = inputCols.head
       val c = col(inputCol)
       val agg = strategy match {
         case "mean" => avg(c)
-        // backtick-escape: see CategoricalMissingValueImputation.fit
+        // backtick-escape: see CategoricalMissingValueImputation.fitAggregate
         case "median" => expr(s"median(${P.quoted(inputCol)})")
         case "mode" => expr(s"mode(${P.quoted(inputCol)}, true)")
         case "min" => min(c)
         case "max" => max(c)
-        case "constant" => return this
+        case "constant" => return None
         case other => throw new IllegalArgumentException(s"strategy: $other")
       }
-      imputed = Option(df.agg(agg.cast("double")).head().get(0)).map(_.asInstanceOf[Double])
-      this
+      Some((agg.cast("double"), v => imputed = Option(v).map(_.asInstanceOf[Double])))
     }
     def transform(in: Column): Column = {
       val v = imputed.getOrElse(notFitted("transform"))
@@ -400,7 +441,7 @@ object Processors {
     * null elements, ERROR adds a runtime assert. Pure `concat(array(...))` —
     * no spark.ml VectorUDT in the hot path, arrays stay codegen-friendly.
     */
-  final class VectorAssembler(params: Map[String, Any]) extends Nto1ColumnProcessor {
+  final class VectorAssembler(params: Map[String, Any]) extends Nto1ColumnProcessor with Stateless {
     val name = "VectorAssembler"
     val inputMLTypes = Seq(MLType.Int, MLType.Float, MLType.Vector, MLType.SparseVector)
     val outputMLType = MLType.Vector
@@ -434,7 +475,8 @@ object Processors {
     * representation = struct(size, indices, values); expansion is a codegen'd
     * `transform(sequence(...))` — no UDF.
     */
-  final class VectorDensifier(params: Map[String, Any]) extends SingleColumnProcessor {
+  final class VectorDensifier(params: Map[String, Any])
+      extends SingleColumnProcessor with Stateless {
     val name = "VectorDensifier"
     val inputMLTypes = Seq(MLType.SparseVector)
     val outputMLType = MLType.Vector

@@ -179,8 +179,14 @@ object ScalableEncoders {
     * (the trade: no inverse mapping, collisions fold rare terms together).
     * Pure shuffle-free Column algebra via
     * [[graft.ops.TextAnalysis.hashedTokenFeatures]].
+    *
+    * Per-row cost: one md5 per token, plus one pass over the `dim` counts
+    * per token in the counting fold (O(tokens × dim)); `norm: l2` adds one
+    * O(dim) pass through the native [[graft.functions.L2Normalize]], which
+    * evaluates the count vector once.
     */
-  final class HashedTextVectorization(params: Map[String, Any]) extends SingleColumnProcessor {
+  final class HashedTextVectorization(params: Map[String, Any])
+      extends SingleColumnProcessor with Stateless {
     import Processors.P._
 
     val name = "HashedTextVectorization"
@@ -195,13 +201,8 @@ object ScalableEncoders {
     def transform(in: Column): Column = {
       val counts = org.apache.spark.sql.functions.transform(
         graft.ops.TextAnalysis.hashedTokenFeatures(in, dim), _.cast("double"))
-      if (norm == "none") counts
-      else {
-        val l2 = sqrt(aggregate(counts, lit(0.0), (acc, v) => acc + v * v))
-        // all-zero vector (empty/whitespace doc) stays all-zero, not NaN
-        when(l2 === 0.0, counts)
-          .otherwise(org.apache.spark.sql.functions.transform(counts, v => v / l2))
-      }
+      // all-zero vector (empty/whitespace doc) stays all-zero, not NaN
+      if (norm == "none") counts else graft.functions.L2Normalize.l2_normalize(counts)
     }
   }
 

@@ -11,8 +11,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * bears materializes the frame and slices numpy index arrays; that cannot
   * exist at 100 TB. Instead:
   *
-  *   1. a global row position is synthesized with sort + `zipWithIndex`
-  *      (range-partitioned sort, per-partition offset fix — the same
+  *   1. a global row position is synthesized with sort + per-partition
+  *      offsets (range-partitioned sort, one partition-size job — the same
   *      `__ROW_UID__` trick the reference's Dask layout uses,
   *      `DaskScalableDataFrame.py:643-684`, without a driver materialize);
   *   2. seeded shuffling = ordering by `xxhash64(uid, seed)` — deterministic
@@ -55,14 +55,30 @@ object BatchStream {
     * deterministic base order (a key, not `rand()`); with `shuffle` the
     * order is the seeded hash of those columns.
     */
-  def withPosition(df: DataFrame, orderBy: Seq[Column], shuffle: Boolean, seed: Long): DataFrame = {
+  def withPosition(df: DataFrame, orderBy: Seq[Column], shuffle: Boolean, seed: Long): DataFrame =
+    positioned(df, orderBy, shuffle, seed)._1
+
+  /** [[withPosition]] plus the row count N. Like `zipWithIndex`, one job
+    * sizes the sorted partitions to find each partition's first position;
+    * it sizes the last partition too, and their sum is N.
+    */
+  private def positioned(
+      df: DataFrame, orderBy: Seq[Column], shuffle: Boolean, seed: Long): (DataFrame, Long) = {
     val sortKey: Seq[Column] =
       if (shuffle) Seq(xxhash64(orderBy :+ lit(seed): _*)) ++ orderBy
       else orderBy
     val sorted = df.orderBy(sortKey: _*)
     val schema = StructType(sorted.schema.fields :+ StructField(PosCol, LongType, nullable = false))
-    val withPos = sorted.rdd.zipWithIndex.map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }
-    df.sparkSession.createDataFrame(withPos, schema)
+    val rows = sorted.rdd
+    val sizes = rows.mapPartitions(it => {
+      var k = 0L; while (it.hasNext) { it.next(); k += 1L }; Iterator.single(k)
+    }).collect()
+    val starts = sizes.scanLeft(0L)(_ + _)
+    val withPos = rows.mapPartitionsWithIndex { (p, it) =>
+      var pos = starts(p) - 1
+      it.map { r => pos += 1; Row.fromSeq(r.toSeq :+ pos) }
+    }
+    (df.sparkSession.createDataFrame(withPos, schema), starts.last)
   }
 
   /** Filter to the requested shard and assign batch ids — all Column
@@ -166,8 +182,7 @@ object BatchStream {
     * total order (e.g. the primary key) for deterministic results.
     */
   def assign(df: DataFrame, orderBy: Seq[Column], plan: Plan): DataFrame = {
-    val n = df.count()
-    val withPos = withPosition(df, orderBy, plan.shuffle, plan.seed)
+    val (withPos, n) = positioned(df, orderBy, plan.shuffle, plan.seed)
     assignBatches(withPos, n, plan)
   }
 

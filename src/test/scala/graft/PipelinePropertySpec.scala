@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{MLSchema, MLType}
-import graft.processor.{DataPipeline, PipelineConfig, StepConfig}
+import graft.processor.{DataPipeline, Nto1ColumnProcessor, PipelineConfig, ProcessorRegistry,
+  SingleColumnProcessor, StepConfig}
 
 /** Randomized orchestration differential: a generated sequence of text
   * processor steps is serialized to YAML, parsed back, fitted and applied
@@ -150,5 +151,92 @@ class PipelinePropertySpec extends AnyFunSuite {
     assert(row.getAs[String]("t1_up") == "ABC")
     assert(row.getAs[String]("t1") == "abc", "templated output must not clobber the input")
     assert(row.getAs[String]("cat") == "keep", "categorical column must not match 'text'")
+  }
+
+  test("staged fit: every binding's state equals fitting each processor on its own, in order") {
+    import org.scalacheck.Gen
+    // stage 1: the imputations, four label encodings, TF-IDF (its own fit
+    // beside the stage's aggregate) and a SKIP step (no `absent` column);
+    // stage 2 opens at the encoding of `cat`, which stage 1 imputed in place
+    // with a new label, so a fit against the unimputed `cat` would miss it
+    val steps = Seq(
+      StepConfig(Seq("cat"), "CategoricalMissingValueImputation",
+        Map("strategy" -> "constant", "fill_value" -> "unset"), "{col_name}"),
+      StepConfig(Seq("bin"), "CategoricalMissingValueImputation", Map.empty, "{col_name}"),
+      StepConfig(Seq("num"), "NumericMissingValueImputation",
+        Map("strategy" -> "median"), "{col_name}"),
+      StepConfig(Seq("dlab", "big", "day", "ts"), "LabelEncoding", Map.empty, "{col_name}_enc"),
+      StepConfig(Seq("absent"), "LabelEncoding", Map.empty, "{col_name}_enc"),
+      StepConfig(Seq("txt"), "TFIDFVectorization", Map("max_features" -> 6), "txt_tfidf"),
+      StepConfig(Seq("cat"), "LabelEncoding", Map.empty, "cat_enc"),
+      StepConfig(Seq("bin"), "LabelEncoding", Map("encoding_range" -> "binary_zero_one"), "bin01"),
+      StepConfig(Seq("bin"), "LabelEncoding",
+        Map("encoding_range" -> "binary_plus_minus_one"), "binpm"),
+      StepConfig(Seq("txt", "cat"), "TextConcatenation",
+        Map("column_order" -> "sort_by_shortest_first"), "joined"))
+    val schema = MLSchema(Map("cat" -> MLType.Categorical, "num" -> MLType.Float,
+      "txt" -> MLType.Text, "bin" -> MLType.Categorical))
+    val two53 = 1L << 53
+    val dayOf = (d: Int) => java.sql.Date.valueOf(java.time.LocalDate.of(2024, 1, 1).plusDays(d))
+    val tsOf = (s: Int) => java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(1700000000L + s))
+    val rowGen = for {
+      cat <- Gen.frequency(4 -> Gen.oneOf("red", "green", "blue"), 1 -> Gen.const(null))
+      num <- Gen.frequency(4 -> Gen.chooseNum(-5, 5).map(i => Double.box(i * 1.5)),
+        1 -> Gen.const(null))
+      // NaN and null are no labels; -0.0 and 0.0 are one label
+      dlab <- Gen.oneOf[java.lang.Double](2.5, -1.0, 0.0, -0.0, Double.NaN, null)
+      // 2^53 and 2^53 + 1 cast to the same double
+      big <- Gen.oneOf[java.lang.Long](two53, two53 + 1, two53 + 2, -7L, null)
+      day <- Gen.chooseNum(0, 40).map(dayOf)
+      ts <- Gen.chooseNum(0, 3).map(tsOf)
+      txt <- Gen.oneOf("a bb", "ccc dd ee", "ff", "")
+      bin <- Gen.oneOf("yes", "no")
+    } yield (i: Long) => (i, cat, num, dlab, big, day, ts, txt, bin)
+    for (trial <- 1 to 2) {
+      val rows = List.tabulate(40)(i => sampled(rowGen)(i.toLong))
+        .updated(0, sampled(rowGen)(0L).copy(_2 = null))
+      val df = rows.toDF("id", "cat", "num", "dlab", "big", "day", "ts", "txt", "bin")
+      val pipe = new DataPipeline(PipelineConfig(steps, Nil)).fit(df, schema)
+      // the reference: step by step, every binding fitted against the frame
+      // its step sees, then the step applied
+      var cur = df
+      val want = steps.filter(_.input.forall(df.columns.contains)).map { s =>
+        val groups = if (s.transformer == "TextConcatenation") Seq(s.input) else s.input.map(Seq(_))
+        val binds = groups.map { ins =>
+          val p = ProcessorRegistry.create(s.transformer, s.params)
+          p match {
+            case q: SingleColumnProcessor => q.fit(cur, ins.head)
+            case q: Nto1ColumnProcessor => q.fit(cur, ins)
+          }
+          (ins, p, s.output.replace("{col_name}", ins.sorted.mkString("_")))
+        }
+        binds.foreach { case (ins, p, o) =>
+          cur = cur.withColumn(o, p match {
+            case q: SingleColumnProcessor => q.transform(col(ins.head))
+            case q: Nto1ColumnProcessor => q.transform(cur, ins)
+          })
+        }
+        (s.transformer, binds.map { case (ins, p, o) => (ins, o, p.state) })
+      }
+      val got = pipe.steps.map(s =>
+        (s.transformer, s.bindings.map { case (ins, p, o) => (ins, o, p.state) }))
+      assert(got == want, s"trial $trial: staged fit diverged from the in-order fit")
+      // the label rule itself, from the driver: sorted distinct values
+      // (numeric order, ties by value), nulls and NaN dropped, toString
+      def labels(col: String): Seq[String] =
+        got.flatMap(_._2).collectFirst { case (Seq(`col`), _, st) if st.contains("labels") =>
+          st("labels") }.get
+          .split('\u001e').toSeq.map(_.split('\u001f').head)
+      val dl = rows.flatMap(r => Option(r._4)).map(_.doubleValue).filterNot(_.isNaN)
+        .map(d => if (d == 0.0) 0.0 else d).distinct.sorted(Ordering.Double.TotalOrdering)
+      assert(labels("cat").contains("unset"), s"trial $trial: cat encoded before its imputation")
+      assert(labels("dlab") == dl.map(_.toString), s"trial $trial: double labels")
+      assert(labels("big") == rows.flatMap(r => Option(r._5)).map(_.longValue).distinct.sorted
+        .map(_.toString), s"trial $trial: long labels")
+      assert(labels("day") == rows.map(_._6).distinct.sortBy(_.getTime).map(_.toString),
+        s"trial $trial: date labels")
+      assert(labels("ts") == rows.map(_._7).distinct.sortBy(_.getTime).map(_.toString),
+        s"trial $trial: timestamp labels")
+    }
   }
 }

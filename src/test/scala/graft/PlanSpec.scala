@@ -286,6 +286,50 @@ class PlanSpec extends AnyFunSuite {
       s"q175 ran $n SQL executions — an extra eager pass crept into the pipeline")
   }
 
+  test("staged pipeline fit: 2 executions for the feed-shaped pipeline") {
+    // Two stages: (1) both imputations' aggregates, (2) the three label
+    // encodings, which read cat_a after stage 1 imputed it in place. The
+    // vectorizer and the assembler fit nothing. A third execution means a
+    // fit ran its own query instead of riding its stage's one aggregate.
+    import spark.implicits._
+    import graft.core.{MLSchema, MLType}
+    import graft.processor.{DataPipeline, PipelineConfig}
+    val yaml =
+      """pipeline:
+        |  - input: [cat_a]
+        |    transformer: CategoricalMissingValueImputation
+        |    params: {strategy: mode}
+        |  - input: [num_x, num_y]
+        |    transformer: NumericMissingValueImputation
+        |    params: {strategy: mean}
+        |  - input: [cat_a, cat_b, label]
+        |    transformer: LabelEncoding
+        |    output: "{col_name}_enc"
+        |  - input: [text]
+        |    transformer: HashedTextVectorization
+        |    params: {dim: 16}
+        |    output: text_vec
+        |  - input: [num_x, num_y, qty, cat_a_enc, cat_b_enc, text_vec]
+        |    transformer: VectorAssembler
+        |    output: features
+        |""".stripMargin
+    val schema = MLSchema(Map(
+      "id" -> MLType.Index, "cat_a" -> MLType.Categorical, "cat_b" -> MLType.Categorical,
+      "num_x" -> MLType.Float, "num_y" -> MLType.Float, "qty" -> MLType.Int,
+      "text" -> MLType.Text, "label" -> MLType.Categorical))
+    val df = Seq[(Long, String, String, java.lang.Double, java.lang.Double, Int, String, String)](
+      (1L, "a", "x", 1.0, null, 3, "red fox", "p"),
+      (2L, null, "y", null, 2.0, 1, "blue jay", "q"),
+      (3L, "b", "x", 4.0, 5.0, 2, "", "p"))
+      .toDF("id", "cat_a", "cat_b", "num_x", "num_y", "qty", "text", "label")
+    val pipe = new DataPipeline(PipelineConfig.fromYaml(yaml))
+    val n = sqlExecutionsOf(pipe.fit(df, schema))
+    assert(n == 2, s"feed-shaped pipeline fit ran $n SQL executions — expected one per stage")
+    assert(pipe.lastFitPerf.map(_.transformer) == Seq("CategoricalMissingValueImputation",
+      "NumericMissingValueImputation", "LabelEncoding", "HashedTextVectorization",
+      "VectorAssembler"))
+  }
+
   test("unstaged text ops: exactly one materializing action each (r7 staging verdict)") {
     // Each op's ONLY action is its eager result cut (localCheckpoint): the
     // token/gram stream is re-derived per consumer instead of cached, and

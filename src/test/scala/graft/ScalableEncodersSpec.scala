@@ -146,6 +146,57 @@ class ScalableEncodersSpec extends AnyFunSuite {
     assert(nrm(1).getSeq[Double](0).forall(_ == 0.0))
   }
 
+  test("HashedTextVectorization l2: native kernel is bit-identical to the HOF spelling") {
+    // the spelling the kernel replaced, kept as the reference
+    def reference(counts: org.apache.spark.sql.Column) = {
+      val l2 = sqrt(aggregate(counts, lit(0.0), (acc, v) => acc + v * v))
+      when(l2 === 0.0, counts).otherwise(transform(counts, v => v / l2))
+    }
+    def bits(r: org.apache.spark.sql.Row): Option[Seq[Option[Long]]] =
+      if (r.isNullAt(1)) None
+      else Some(r.getSeq[java.lang.Double](1).map(d =>
+        Option(d).map(java.lang.Double.doubleToRawLongBits(_))))
+    def rows(df: DataFrame, c: org.apache.spark.sql.Column) =
+      df.select(col("i"), c).collect().map(r => r.getInt(0) -> bits(r)).toMap
+    def assertSame(got: Map[Int, Option[Seq[Option[Long]]]],
+        want: Map[Int, Option[Seq[Option[Long]]]], what: String): Unit = {
+      val bad = want.keys.toSeq.sorted.filter(i => !got.get(i).contains(want(i)))
+      assert(got.keySet == want.keySet && bad.isEmpty,
+        s"$what: kernel diverged from the HOF spelling at rows ${bad.take(3)}: " +
+          bad.take(1).map(i => s"${got.get(i)} vs ${want(i)}").mkString)
+    }
+    val docs = Seq("alpha beta alpha gamma", "", "   ", null, "the quick brown fox the fox")
+    val textDf = docs.zipWithIndex.map { case (t, i) => (i, t) }.toDF("i", "t")
+    for (dim <- Seq(1, 16, 1024)) {
+      val counts = transform(graft.ops.TextAnalysis.hashedTokenFeatures(col("t"), dim),
+        _.cast("double"))
+      val want = rows(textDf, reference(counts))
+      assert(want(1).get.forall(_.contains(0L)) && want(2).get.forall(_.contains(0L)) &&
+        want(3).isEmpty,
+        s"dim $dim: reference keeps blank docs all-zero and a null doc null")
+      val p = new HashedTextVectorization(Map("dim" -> dim))
+      for (mode <- Seq("codegen", "interpreted")) {
+        val got = PropertyTestKit.withExecutedMode(spark, mode)(rows(textDf, p.transform(col("t"))))
+        assertSame(got, want, s"dim $dim $mode")
+      }
+    }
+    // random real-valued arrays (every rounding of the sum and the division
+    // shows), and arrays the vectorizer never produces: null, NaN and
+    // infinite elements
+    import org.scalacheck.Gen
+    val random = PropertyTestKit.sampled(Gen.listOfN(60, Gen.chooseNum(0, 12).flatMap(n =>
+      Gen.listOfN(n, Gen.chooseNum(-1e3, 1e3).map(Double.box)))))
+    val arrays = random ++ Seq[Seq[java.lang.Double]](Seq(), Seq(0.0, 0.0), Seq(3.0, null, 4.0),
+      Seq(1.0, Double.NaN), Seq(Double.PositiveInfinity, 2.0), Seq(1e-200, 3e-200), null)
+    val arrDf = arrays.zipWithIndex.map { case (a, i) => (i, a) }.toDF("i", "a")
+    val want = rows(arrDf, reference(col("a")))
+    for (mode <- Seq("codegen", "interpreted")) {
+      val got = PropertyTestKit.withExecutedMode(spark, mode)(
+        rows(arrDf, graft.functions.L2Normalize.l2_normalize(col("a"))))
+      assertSame(got, want, s"$mode arrays")
+    }
+  }
+
   test("HashedTextVectorization runs from PipelineConfig (the unbounded-vocab TF path)") {
     val yaml =
       """pipeline:
